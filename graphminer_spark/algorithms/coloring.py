@@ -90,7 +90,7 @@ def greedy_coloring(
     )
     state = ckpt.save(state, 0, {"algo": "coloring", "kind": "state"})
     rounds = 0
-    last_n = 0
+    uncolored = 0
     with superstep_planning(sym_edges.sparkSession, n_sym):
         for rounds in range(1, max_rounds + 1):
             nb = full_e.join(
@@ -141,23 +141,27 @@ def greedy_coloring(
                 .cast("long")
                 .alias("won"),
             )
-            # ONE action: the winner count materializes the round's state
+            # ONE action: the winner and uncolored counts materialize
+            # the round's state
             new_state, row = materialize_with_agg(
-                new_state, F.sum("won").alias("n")
+                new_state,
+                F.sum("won").alias("n"),
+                F.count_if(F.col("color").isNull()).alias("left"),
             )
             ckpt._note(new_state)  # linear chain: free states 2 rounds old
             last_n = int(row["n"] or 0)
+            uncolored = int(row["left"] or 0)
             ckpt.log(rounds, {"algo": "coloring", "winners": last_n})
             state = new_state.select("id", "p", "color")
-            if last_n == 0:
+            if uncolored == 0:
                 break
     full_e.unpersist()
-    if rounds == max_rounds and last_n > 0:
+    if uncolored > 0:
         # exhaustion is not convergence (ADVICE r05): a caller must
         # never mistake a partial coloring for a complete one
         raise RuntimeError(
             f"greedy_coloring: max_rounds={max_rounds} exhausted with "
-            f"{last_n} winners in the final round (coloring incomplete)"
+            f"{uncolored} vertices uncolored (coloring incomplete)"
         )
     return state.filter(F.col("color").isNotNull()).select("id", "color"), rounds
 

@@ -212,9 +212,7 @@ def clustering_coefficient(
     deg = degrees(symmetrize(canonical_edges, dedup=False))
     tri = enumerate_triangles(dag)
     per_v = (
-        tri.select(F.col("u").alias("id"))
-        .unionByName(tri.select(F.col("v").alias("id")))
-        .unionByName(tri.select(F.col("w").alias("id")))
+        tri.select(F.explode(F.array("u", "v", "w")).alias("id"))
         .groupBy("id")
         .agg(F.count("*").alias("tri_cnt"))
     )

@@ -13,11 +13,22 @@ The wedge join (e1 ⋈ e2 on ``e1.dst = e2.src``) dominates: its output
 is Σ_v indeg(v)·outdeg(v). Degree-ordering bounds DAG out-degree at
 O(√m) for power-law graphs (the same reason the reference defaults to
 DAG mode — ``src/triangle/README.md:13-17``), so the wedge join stays
-tractable at 100 TB where a raw-orientation join would not. AQE's skew
-join splits any residual hot ``e1.dst`` partitions. Counter widths:
-global counts use ``sum`` over per-group longs and are exposed as
-``decimal(38,0)`` upstream when graphs approach uint64 scale
-(``src/count/README.md:51`` reaches 2.4e18).
+tractable at 100 TB where a raw-orientation join would not.
+
+The enumeration reads its DAG three times (``e1``, ``e2``, ``e3``).
+The DAG is marked with a lazy ``localCheckpoint`` first, so the degree
+aggregate and orientation joins behind it run once and all three reads
+scan the stored blocks. At ~10^5 edges AQE turns both joins into
+broadcast hash joins at run time; on larger graphs they stay shuffle
+joins and AQE's skew join splits any residual hot ``e1.dst``
+partitions. Every output derived from triangles (per-edge counts,
+per-vertex counts, 4-cliques) hangs off ONE enumeration: a triangle's
+three edges or vertices are emitted by one ``explode``, so the
+enumeration subtree is planned and run once.
+
+Counter widths: global counts use ``sum`` over per-group longs and are
+exposed as ``decimal(38,0)`` upstream when graphs approach uint64
+scale (``src/count/README.md:51`` reaches 2.4e18).
 """
 
 from __future__ import annotations
@@ -26,18 +37,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _stored_triangles(dag: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(stored DAG, triangles over it)``: the DAG's ``(src, dst)``
+    marked with a lazy ``localCheckpoint`` (no action here; the first
+    job that reads it stores the blocks, later reads scan them, and
+    Spark's cleaner frees them once the DataFrame is garbage-collected)
+    and the enumeration built on it, for callers that join the DAG
+    again."""
+    d = dag.select("src", "dst").localCheckpoint(eager=False)
+    e1 = d.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    e2 = d.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+    e3 = d.select(F.col("src").alias("u"), F.col("dst").alias("w"))
+    wedges = e1.join(e2, "v")
+    return d, wedges.join(e3, ["u", "w"]).select("u", "v", "w")
+
+
 def enumerate_triangles(dag: DataFrame) -> DataFrame:
     """All triangles, one row each: ``(u, v, w)`` in DAG order.
 
-    Two shuffle hash joins; Catalyst pushes the equi-conditions into
-    the join keys, nothing is re-shuffled between the wedge join and
-    the closing join (both keyed compatibly on the probe side).
+    Two joins (wedge, then closing) over three reads of the DAG, which
+    is built once: the reads scan a lazy ``localCheckpoint`` of it.
     """
-    e1 = dag.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    e2 = dag.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    e3 = dag.select(F.col("src").alias("u"), F.col("dst").alias("w"))
-    wedges = e1.join(e2, "v")
-    return wedges.join(e3, ["u", "w"]).select("u", "v", "w")
+    return _stored_triangles(dag)[1]
 
 
 def triangle_count(dag: DataFrame) -> DataFrame:
@@ -145,14 +166,20 @@ def per_edge_triangles(
     """
     if tri is None:
         tri = enumerate_triangles(dag)
-    sides = (
-        tri.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionByName(tri.select(F.col("v").alias("a"), F.col("w").alias("b")))
-        .unionByName(tri.select(F.col("u").alias("a"), F.col("w").alias("b")))
+    # one pass over one enumeration emits each triangle's three edges
+    sides = tri.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("a"), F.col("v").alias("b")),
+                F.struct(F.col("v").alias("a"), F.col("w").alias("b")),
+                F.struct(F.col("u").alias("a"), F.col("w").alias("b")),
+            )
+        ).alias("e")
     )
     counts = (
         sides.select(
-            F.least("a", "b").alias("src"), F.greatest("a", "b").alias("dst")
+            F.least("e.a", "e.b").alias("src"),
+            F.greatest("e.a", "e.b").alias("dst"),
         )
         .groupBy("src", "dst")
         .agg(F.count("*").alias("tri_cnt"))
@@ -224,13 +251,16 @@ def clique4_count(dag: DataFrame, tri: DataFrame | None = None) -> DataFrame:
     """4-clique count: extend each triangle by a common out-neighbor.
 
     Reference: ``src/clique/cpu_kernels/clique_base.h`` (k=4) — one more
-    bounded intersection per level; here one more join per level.
+    bounded intersection per level; here one more join per level. The
+    three extension joins and the enumeration (when ``tri`` is not
+    passed) share one stored copy of the DAG.
     Output: single row ``(n_4cliques: long)``.
     """
+    d, own = _stored_triangles(dag)
     if tri is None:
-        tri = enumerate_triangles(dag)
-    e_u = dag.select(F.col("src").alias("u"), F.col("dst").alias("x"))
-    e_v = dag.select(F.col("src").alias("v"), F.col("dst").alias("x"))
-    e_w = dag.select(F.col("src").alias("w"), F.col("dst").alias("x"))
+        tri = own
+    e_u = d.select(F.col("src").alias("u"), F.col("dst").alias("x"))
+    e_v = d.select(F.col("src").alias("v"), F.col("dst").alias("x"))
+    e_w = d.select(F.col("src").alias("w"), F.col("dst").alias("x"))
     quads = tri.join(e_u, "u").join(e_v, ["v", "x"]).join(e_w, ["w", "x"])
     return quads.agg(F.count("*").alias("n_4cliques"))

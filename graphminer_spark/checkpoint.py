@@ -27,6 +27,7 @@ import json
 import os
 import threading
 import time
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +38,9 @@ from pyspark.sql import functions as F
 # AQE off — 9.6 s vs 12.7 s best-of-3 at sf0.1); above it, runtime
 # coalescing/skew handling pays for the planning cost many times over.
 SUPERSTEP_AQE_MIN_EDGES = 50_000_000
+
+# set once a release-chain unpersist has failed and been warned about
+_release_failure_warned = False
 
 # serializes AQE-gated superstep loops within one driver process so
 # overlapping loops cannot restore each other's stale conf value
@@ -123,6 +127,7 @@ class CheckpointManager:
     def _note(self, out: DataFrame) -> None:
         """Track a freshly-materialized localCheckpoint state; release
         the state two generations back (dead in a linear chain)."""
+        global _release_failure_warned
         if not self.release_chain:
             return
         self._chain.append(out)
@@ -130,8 +135,19 @@ class CheckpointManager:
             old = self._chain.pop(0)
             try:
                 old._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass  # never let bookkeeping break the algorithm
+            except Exception as exc:
+                # never let bookkeeping break the algorithm, but say so
+                # (once per driver session) instead of leaking silently
+                if not _release_failure_warned:
+                    _release_failure_warned = True
+                    warnings.warn(
+                        "CheckpointManager: releasing a superseded "
+                        f"superstep state failed ({exc!r}); its blocks "
+                        "stay cached until Spark's cleaner frees them. "
+                        "Further release failures are not reported.",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
 
     def detach_chain(self) -> None:
         """Forget (without releasing) the tracked states — call when a

@@ -148,6 +148,31 @@ def test_pagerank_checkpoint_resume(spark, tmp_path):
     assert any(r.get("delta", 1) < 1e-10 for r in recs)
 
 
+def test_release_chain_failure_warns_once(monkeypatch):
+    """A failed release in the chain must surface as one warning per
+    session, never break the caller and never pass silently."""
+    import warnings
+
+    from graphminer_spark import checkpoint
+
+    class Unreleasable:
+        @property
+        def _jdf(self):
+            raise RuntimeError("unpersist refused")
+
+    monkeypatch.setattr(checkpoint, "_release_failure_warned", False)
+    ck = CheckpointManager(None, release_chain=True)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for _ in range(5):  # three states age out, three releases fail
+            ck._note(Unreleasable())
+    msgs = [w for w in caught if "releasing a superseded" in str(w.message)]
+    assert len(msgs) == 1
+    assert issubclass(msgs[0].category, RuntimeWarning)
+    assert "unpersist refused" in str(msgs[0].message)
+    assert len(ck._chain) == 2
+
+
 # ------------------------------------------------------------------- LP
 
 

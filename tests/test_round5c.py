@@ -195,6 +195,22 @@ def test_coloring_rounds_under_gate_unroll(spark):
     assert rounds < 46
 
 
+def test_coloring_completes_at_exactly_max_rounds(spark):
+    """A coloring that finishes in exactly ``max_rounds`` is complete
+    and must be returned; one round fewer leaves vertices uncolored
+    and must raise."""
+    sym = _sym(spark, TWO_TRIANGLES + [(2, 6), (6, 0), (5, 7)])
+    want, rounds = greedy_coloring(sym)
+    assert rounds >= 2
+    got, at_limit = greedy_coloring(sym, max_rounds=rounds)
+    assert at_limit == rounds
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+    with pytest.raises(RuntimeError, match="uncolored"):
+        greedy_coloring(sym, max_rounds=rounds - 1)
+
+
 def test_coloring_deterministic_across_parallelism(spark):
     sym = _sym(spark, TWO_TRIANGLES + [(2, 6), (6, 0), (5, 7)])
     a, _ = greedy_coloring(sym)

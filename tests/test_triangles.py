@@ -4,11 +4,13 @@ methodology, ``src/triangle/README.md:51-64``)."""
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 
 from graphminer_spark.algorithms.triangles import (
     clique4_count,
+    enumerate_triangles,
     per_edge_triangles,
     triangle_count,
 )
@@ -47,6 +49,53 @@ def test_triangles_random_vs_oracle(spark):
     rows = per_edge_triangles(df, dag).collect()
     got = {(r["src"], r["dst"]): r["tri_cnt"] for r in rows}
     assert got == per_edge
+
+
+@pytest.mark.parametrize("mode", ["include_zero", "nonzero_only", "shared_tri"])
+def test_per_edge_vs_oracle_each_mode(spark, mode):
+    """Every per-edge mode matches the brute-force oracle, and each
+    triangle adds exactly 1 to each of its three edges."""
+    edges = _random_graph(n=150, m=1200, seed=23)
+    total, per_edge = brute_triangles(edges)
+    assert total > 0
+    df = edges_df(spark, edges)
+    dag = build_dag(df)
+    tri = None
+    want = per_edge
+    if mode == "nonzero_only":
+        want = {e: c for e, c in per_edge.items() if c > 0}
+    elif mode == "shared_tri":
+        tri = enumerate_triangles(dag).persist()
+    try:
+        out = per_edge_triangles(
+            df, dag, include_zero=mode != "nonzero_only", tri=tri
+        )
+        got = {(r["src"], r["dst"]): r["tri_cnt"] for r in out.collect()}
+    finally:
+        if tri is not None:
+            tri.unpersist()
+    assert got == want
+    assert sum(got.values()) == 3 * total
+
+
+def test_per_edge_plan_enumerates_once(spark):
+    """The final plan holds ONE enumeration: no Union, and exactly the
+    wedge, closing and ``include_zero`` left joins. The DAG is read
+    from stored blocks, so its own degree and orientation joins do not
+    appear either."""
+    df = edges_df(spark, _random_graph(n=120, m=900, seed=5))
+    out = per_edge_triangles(df, build_dag(df))
+    out.collect()  # AQE: only the final plan shows the executed joins
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "Union" not in final
+    joins = re.findall(
+        r"\b(?:BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin"
+        r"|BroadcastNestedLoopJoin|CartesianProduct)\b",
+        final,
+    )
+    assert len(joins) == 3, final
 
 
 def test_per_edge_includes_zero_edges(spark):
